@@ -58,15 +58,13 @@ object StoreMaintainMain {
       // the RESOLVED bucket spec
       attempt += 1
       val h = Incremental.PortableHandle.decode(cur.head)
-      val cells = cur(1).toInt
       Incremental.registerHandle(spark, h): Unit
       val tomb = spark.table(h.name)
         .filter(col("cid") % 7 === 3 && col("cid") >= 16)
         .select(col("cid").as("vec_id"))
-      val name = s"graft_xmaint_c${attempt}_" + Scratch.nameTag().take(16)
-      val newTable = Similarity.compactIvfIndexAt(spark, h.name, tomb,
-        s"$workDir/child_gen$attempt", name, nBuckets = math.max(cells, 8))
-      Seq(Incremental.exportHandle(spark, newTable).encoded, cells.toString)
+      val newTable = Similarity.compactIvfIndex(spark, h.name, tomb,
+        s"xmaint_c$attempt", dir = Some(s"$workDir/child_gen$attempt"))
+      Seq(Incremental.exportHandle(spark, newTable).encoded, cur(1))
     }
     println(s"STOREMAINT_OK v$v attempts=$attempt")
     spark.stop()

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.store.BucketedStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1577,8 +1578,7 @@ object Dedup {
       buckets: DataFrame, isNew: Column): DataFrame = {
     // per-run table name (the d33 rule): a fixed name collides across
     // concurrent sessions sharing a metastore and outlives the query
-    val table = "graft_band_index_" +
-      graft.Scratch.nameTag()
+    val table = BucketedStore.tableName("band_index")
     writeBandIndex(s, buckets.filter(!isNew), table)
     probeBandIndex(s, table, buckets.filter(isNew))
   }
@@ -1586,66 +1586,6 @@ object Dedup {
   /** The single probe key: band:band_key (fixed-width hex suffix — the
     * concat is collision-free). */
   private def bandKey: Column = concat_ws(":", col("band"), col("band_key"))
-
-  /** Cluster a store write by its bucket key before the bucketed write.
-    * Spark's bucketed writer opens one file per (task, bucket-present-
-    * in-task): an N-task input fans out up to N × nBuckets files —
-    * measured 1026 files for a ~1 MB posting store at sf0.1, and at
-    * 100 TB the same shape is (10k tasks × buckets) of tiny files that
-    * every probe must list and open (guide §6: compact on write). A
-    * repartition on the bucket key is the writer-side exchange that
-    * makes each task hold exactly one bucket → exactly nBuckets files
-    * per write. Parallelism is not lost at scale: the bucket count IS
-    * the corpus-sized scale lever here (d64/d73 migrations grow it with
-    * the data, [[scaleBuckets]] sizes first writes from the input), so
-    * write parallelism grows with the layout. */
-  private[graft] def clusterForBuckets(df: DataFrame, nBuckets: Int,
-      key: String): DataFrame =
-    df.repartition(nBuckets, col(key))
-
-  /** Bucket count of an existing bucketed table, resolved from its
-    * catalog metadata — zero jobs, zero scans. Maintenance writers
-    * (append/compact) must match the STORED generation's spec exactly
-    * (Spark fails a mismatched bucketBy loudly), so they resolve it
-    * here instead of assuming the seed count: after a d64/d73-style
-    * migration grew the layout, appends and compactions ride the grown
-    * count automatically (r14 verdict: the fixed-8 maintenance sites
-    * capped write parallelism at 8 tasks forever). */
-  private[graft] def bucketCountOf(s: org.apache.spark.sql.SparkSession,
-      table: String): Int =
-    s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        throw new IllegalArgumentException(
-          s"$table is not a bucketed store — no bucket spec to resolve"))
-
-  /** Scale-adaptive bucket count for a store's FIRST write: the d73
-    * 8·2^k ladder over the writer input's SOURCE row count, read from
-    * the parquet footers on the driver ([[footerRowCount]] — pure
-    * metadata, zero Spark jobs). Under `clusterForBuckets` each write
-    * task materializes and sorts one whole bucket, so a fixed seed
-    * count caps write parallelism AND per-task memory at corpus scale
-    * (guide §2.5/§5: the 100 TB posting store would be 8 spill-heavy
-    * sort tasks); the ladder keeps per-bucket source volume bounded by
-    * `graft.store.rowsPerBucket` (default 16384 — sized so every
-    * fixture SF keeps the seed-8 layout, bench-comparable, while the
-    * 100× scale probes derive a grown count; a deployment sets the
-    * conf to its executor scan budget in rows). Bounded at 1024 like
-    * the d73 ladder; a non-parquet input (in-memory fixture frames)
-    * falls back to the seed count. Bucket count is PHYSICAL layout
-    * only — probe results are invariant (hash-partitioned join/probe
-    * plans adapt), which is what makes this a safe derivation. */
-  private[graft] def scaleBuckets(df: DataFrame, seed: Int = 8): Int = {
-    val budget = df.sparkSession.conf
-      .getOption("graft.store.rowsPerBucket").map(_.toLong).getOrElse(16384L)
-    footerRowCount(df) match {
-      case Some(rows) =>
-        var b = seed
-        while (b < 1024 && rows > budget * b) b *= 2
-        b
-      case None => seed
-    }
-  }
 
   /** Run independent store-write actions CONCURRENTLY on the session's
     * FIFO scheduler (guide §2.6: overlap independent jobs). The
@@ -1656,8 +1596,9 @@ object Dedup {
     * cluster idles. Submitting them from sibling threads lets each
     * job's tasks back-fill the others' tails — at toy scale it
     * collapses the per-job floors, at 100 TB it fills the write tails.
-    * Failures propagate: the first throwable is rethrown after all
-    * actions settle (no write is silently abandoned mid-flight). */
+    * Failures propagate: after all actions settle, the first throwable
+    * is rethrown with every later one attached as suppressed (no write
+    * is silently abandoned mid-flight, and no failure is dropped). */
   private[graft] def inParallel(actions: (() => Unit)*): Unit = {
     if (actions.size <= 1) { actions.foreach(_()); return }
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -1666,65 +1607,42 @@ object Dedup {
       t.setDaemon(true); t.start(); t
     }
     ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
   }
+
+  /** The band index's stored row format: (bk, id), bucketed on `bk`. */
+  private def bandRows(buckets: DataFrame): DataFrame =
+    buckets.select(bandKey.as("bk"), col("id"))
+
+  private def bandGeneration(tag: String): BucketedStore.Generation =
+    BucketedStore.newGeneration(s"band_index_$tag", "band_index")
 
   /** Writes a band-bucket DataFrame as the stored index table, bucketed
     * on the probe key. Paid once per corpus build; maintained at ingest
     * in production (d17 sketch merge). Bucket count is scale-derived
-    * from the source ([[scaleBuckets]]); every fixture SF lands the
-    * seed-8 layout. */
+    * from the source ([[BucketedStore.scaleBuckets]]); every fixture SF
+    * lands the seed-8 layout, and a corpus that outgrows its count
+    * migrates with [[migrateBandIndex]]. */
   def writeBandIndex(s: org.apache.spark.sql.SparkSession,
       corpusBuckets: DataFrame, table: String): Unit =
-    writeBandIndexN(s, corpusBuckets, table, scaleBuckets(corpusBuckets))
-
-  /** Band-index write at an EXPLICIT bucket count. The count is
-    * GENERATION STATE (d64 publishes it in the catalog next to the
-    * table handle): a maintenance append must match the stored table's
-    * spec exactly — Spark refuses a mismatched bucketBy, the loud guard
-    * RoundTwelveSpec drills — so writers resolve the spec, never assume
-    * it. 8 suits the fixture; a corpus that grew 100× migrates to a
-    * larger count with [[migrateBandIndex]] instead of living with
-    * oversized buckets. */
-  def writeBandIndexN(s: org.apache.spark.sql.SparkSession,
-      corpusBuckets: DataFrame, table: String, nBuckets: Int): Unit = {
-    val dir = graft.Scratch.dir(s"graft_$table")
-    clusterForBuckets(corpusBuckets.select(bandKey.as("bk"), col("id")),
-        nBuckets, "bk")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "bk").sortBy("bk")
-      .option("path", s"$dir/band_index").saveAsTable(table)
-  }
+    BucketedStore.write(bandRows(corpusBuckets), "bk",
+      BucketedStore.scaleBuckets(corpusBuckets),
+      BucketedStore.Generation(table, graft.Scratch.dir(table) + "/band_index")): Unit
 
   /** Appends an ingested batch's band keys to an EXISTING stored index
-    * table — the maintenance write production runs at ingest instead of
-    * rebuilding the corpus index. Spark's bucketed append writes the new
-    * rows as additional files of the SAME bucket spec (hash(bk) % 8), so
-    * the layout invariant the exchange-free probe relies on survives the
-    * update; d54's spec proves probe-after-append byte-identical to
-    * probe-after-rebuild. */
+    * table at its stored bucket spec — the maintenance write production
+    * runs at ingest instead of rebuilding the corpus index. The new rows
+    * land as additional files of the SAME layout, so the invariant the
+    * exchange-free probe relies on survives the update, also after a
+    * [[migrateBandIndex]] grew the count; d54's spec proves
+    * probe-after-append byte-identical to probe-after-rebuild. */
   def appendBandIndex(s: org.apache.spark.sql.SparkSession,
       batchBuckets: DataFrame, table: String): Unit =
-    appendBandIndexN(s, batchBuckets, table, bucketCountOf(s, table))
-
-  /** Bucketed append at an EXPLICIT (catalog-resolved) bucket count —
-    * the maintenance write after a [[migrateBandIndex]] generation
-    * swap. A count that disagrees with the stored table's spec fails
-    * loudly in Spark's bucket validation (drilled), which is exactly
-    * why d64 carries the spec in the catalog. */
-  def appendBandIndexN(s: org.apache.spark.sql.SparkSession,
-      batchBuckets: DataFrame, table: String, nBuckets: Int): Unit = {
-    clusterForBuckets(batchBuckets.select(bandKey.as("bk"), col("id")),
-        nBuckets, "bk")
-      .write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "bk").sortBy("bk")
-      .saveAsTable(table)
-    // Inside foreachBatch the write commits through the cloned micro-
-    // batch session; refresh through the CALLER's session as well so its
-    // readers list the appended files (see appendIvfIndex — the staleness
-    // was measured on the vector twin of this helper).
-    s.catalog.refreshTable(table)
-  }
+    BucketedStore.append(s, bandRows(batchBuckets), table)
 
   /** d64 — RE-BUCKET MIGRATION: rewrite the stored band index into a
     * new generation at a DIFFERENT bucket count. Bucket counts are
@@ -1737,47 +1655,25 @@ object Dedup {
     * newCount) atomically so probes and maintenance writers resolve the
     * NEW spec together. */
   def migrateBandIndex(s: org.apache.spark.sql.SparkSession,
-      table: String, nBuckets: Int, tag: String): String = {
-    val newTable = s"graft_band_index_${tag}_" +
-      graft.Scratch.nameTag()
-    val dir = graft.Scratch.dir(s"graft_$newTable")
-    clusterForBuckets(s.table(table)
-        .select(col("bk"), col("id")).distinct(), nBuckets, "bk")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "bk").sortBy("bk")
-      .option("path", s"$dir/band_index").saveAsTable(newTable)
-    newTable
-  }
+      table: String, nBuckets: Int, tag: String): String =
+    BucketedStore.rewrite(s, table, bandGeneration(tag), Some(nBuckets))(
+      _.select(col("bk"), col("id")))
 
   /** Rewrite a stored band index minus tombstoned ids into a NEW
     * generation table — the d57 reclamation pass as a standalone helper
     * (shared by the document-store trio compaction and the media
-    * fingerprint store m11). Same bucketBy(8, bk) spec, so the
-    * exchange-free probe layout survives the generation swap; new-table
-    * discipline, so a crash mid-compaction leaves the old index
-    * untouched. The tombstone frame (column `id`) broadcasts; duplicate
-    * crash-residue rows collapse under the distinct. Returns the new
-    * table name for a catalog publish. */
+    * fingerprint store m11). It rewrites at the CURRENT generation's
+    * bucket spec, so the exchange-free probe layout survives the swap
+    * and a compaction racing a d64 migration (s42) honours the winner's
+    * count; new-table discipline, so a crash mid-compaction leaves the
+    * old index untouched. The tombstone frame (column `id`) broadcasts;
+    * duplicate crash-residue rows collapse under the distinct. Returns
+    * the new table name for a catalog publish. */
   def compactBandIndex(s: org.apache.spark.sql.SparkSession,
       table: String, tomb: DataFrame, tag: String): String =
-    compactBandIndexN(s, table, tomb, tag, nBuckets = bucketCountOf(s, table))
-
-  /** Compaction at an EXPLICIT (catalog-resolved) bucket count — a
-    * compaction publisher racing a d64 migration (s42) must rewrite at
-    * the CURRENT generation's spec, not assume 8. */
-  def compactBandIndexN(s: org.apache.spark.sql.SparkSession,
-      table: String, tomb: DataFrame, tag: String, nBuckets: Int): String = {
-    val newTable = s"graft_band_index_${tag}_" +
-      graft.Scratch.nameTag()
-    val dir = graft.Scratch.dir(s"graft_$newTable")
-    clusterForBuckets(s.table(table)
-        .join(broadcast(tomb.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("bk"), col("id")).distinct(), nBuckets, "bk")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "bk").sortBy("bk")
-      .option("path", s"$dir/band_index").saveAsTable(newTable)
-    newTable
-  }
+    BucketedStore.rewrite(s, table, bandGeneration(tag))(
+      _.join(broadcast(tomb.select(col("id"))), Seq("id"), "left_anti")
+        .select(col("bk"), col("id")))
 
   /** Probes a stored band index with (small) new-batch buckets: the index
     * side reads its bucketed layout with no exchange. Returns candidate
@@ -3456,8 +3352,7 @@ object Dedup {
       shingleWords = 3, bands = 4, rowsPerBand = 2)
     val isWave1 = col("id") % 7 === 3
     val isWave2 = col("id") % 7 === 5
-    val table = "graft_band_index_upd_" +
-      graft.Scratch.nameTag()
+    val table = BucketedStore.tableName("band_index_upd")
     // day 0: index the base corpus; day 1: APPEND the ingested batch
     writeBandIndex(s, buckets.filter(!isWave1 && !isWave2), table)
     appendBandIndex(s, buckets.filter(isWave1), table)
@@ -3781,11 +3676,11 @@ object Dedup {
       shingleWords = 3, bands = 4, rowsPerBand = 2)
     val isWave1 = col("id") % 7 === 3
     val isWave2 = col("id") % 7 === 5
-    val t1 = "graft_band_mig_" +
-      graft.Scratch.nameTag()
-    writeBandIndexN(s, buckets.filter(!isWave1 && !isWave2), t1, 8)
+    val t1 = BucketedStore.tableName("band_mig")
+    writeBandIndex(s, buckets.filter(!isWave1 && !isWave2), t1)
     val cat = graft.Scratch.dir("graft_d64_cat") + "/store.catalog"
-    graft.ops.Incremental.publishCatalog(cat, Seq(t1, "8"))
+    graft.ops.Incremental.publishCatalog(cat,
+      Seq(t1, BucketedStore.bucketCountOf(s, t1).toString))
 
     def probePhase(phase: String): DataFrame = {
       val handles = graft.ops.Incremental.resolveCatalog(cat, expect = 2)
@@ -3813,13 +3708,13 @@ object Dedup {
     // the pre-phase pipeline as its own checkpoint job (guide §2.6).
     val pre = probePhase("pre")
     // the online migration: resolve → rewrite at 32 buckets → ONE atomic
-    // publish of (handle, spec); maintenance then appends at the
-    // RESOLVED spec — the catalog, not convention, keeps writers correct
+    // publish of (handle, spec); maintenance then appends to the
+    // RESOLVED handle, at that generation's stored spec
     val cur = graft.ops.Incremental.resolveCatalog(cat, expect = 2)
     val t2 = migrateBandIndex(s, cur(0), nBuckets = 32, "d64")
     graft.ops.Incremental.publishCatalog(cat, Seq(t2, "32"))
     val post = graft.ops.Incremental.resolveCatalog(cat, expect = 2)
-    appendBandIndexN(s, buckets.filter(isWave1), post(0), post(1).toInt)
+    appendBandIndex(s, buckets.filter(isWave1), post(0))
     pre.unionByName(probePhase("post_migrate"))
       .orderBy("phase", "new_doc_id")
   }
@@ -3890,11 +3785,11 @@ object Dedup {
     val docs = Tables.documents(s, d)
     val (buckets, _) = lshBucketsAndShingles(docs, "doc_id", "text",
       shingleWords = 3, bands = 4, rowsPerBand = 2)
-    val t1 = "graft_band_grw_" +
-      graft.Scratch.nameTag()
-    writeBandIndexN(s, buckets, t1, 8)
+    val t1 = BucketedStore.tableName("band_grw")
+    writeBandIndex(s, buckets, t1)
     val cat = graft.Scratch.dir("graft_d65_cat") + "/store.catalog"
-    graft.ops.Incremental.publishCatalog(cat, Seq(t1, "8"))
+    graft.ops.Incremental.publishCatalog(cat,
+      Seq(t1, BucketedStore.bucketCountOf(s, t1).toString))
     d65Catalog = cat
     // the census: ONE agg over the stored index (8-byte keys only)
     val cur = graft.ops.Incremental.resolveCatalog(cat, expect = 2)
@@ -4039,8 +3934,7 @@ object Dedup {
       shingleWords = 3, bands = 4, rowsPerBand = 2)
     val isTomb = col("id") % 7 === 3
     val isProbe = col("id") % 7 === 5
-    val t1 = "graft_band_tt_" +
-      graft.Scratch.nameTag()
+    val t1 = BucketedStore.tableName("band_tt")
     writeBandIndex(s, buckets.filter(!isProbe), t1)
     val cat = graft.Scratch.dir("graft_d66_cat") + "/store.catalog"
     graft.ops.Incremental.publishCatalogVersioned(cat, Seq(t1))
@@ -4159,8 +4053,7 @@ object Dedup {
       shingleWords = 3, bands = 4, rowsPerBand = 2)
     val isBatch = col("id") % 7 === 3
     val isProbe = col("id") % 7 === 5
-    val t1 = "graft_band_rgc_" +
-      graft.Scratch.nameTag()
+    val t1 = BucketedStore.tableName("band_rgc")
     writeBandIndex(s, buckets.filter(!isBatch && !isProbe), t1)
     // the crash-retry plant: one ingest batch lands TWICE, so the
     // census's residue term is non-zero and the count is verified
@@ -4202,18 +4095,9 @@ object Dedup {
     * generation (catalog-resolved, not assumed 8) → the exchange-free
     * probe layout survives the swap at any migrated count. */
   def cloneBandIndexWithBatch(s: org.apache.spark.sql.SparkSession,
-      table: String, batchBuckets: DataFrame, tag: String): String = {
-    val newTable = s"graft_band_index_${tag}_" + graft.Scratch.nameTag()
-    val dir = graft.Scratch.dir(s"graft_$newTable")
-    val nBuckets = bucketCountOf(s, table)
-    clusterForBuckets(s.table(table)
-        .unionByName(batchBuckets.select(bandKey.as("bk"), col("id")))
-        .distinct(), nBuckets, "bk")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "bk").sortBy("bk")
-      .option("path", s"$dir/band_index").saveAsTable(newTable)
-    newTable
-  }
+      table: String, batchBuckets: DataFrame, tag: String): String =
+    BucketedStore.rewrite(s, table, bandGeneration(tag))(
+      _.unionByName(bandRows(batchBuckets)))
 
   /** d69 — OPTIMISTIC-CONCURRENCY CATALOG COMMIT: the multi-writer story
     * for every maintained store. A real deployment has ingest,
@@ -4285,7 +4169,7 @@ object Dedup {
     val (buckets, _) = lshBucketsAndShingles(docs, "doc_id", "text",
       shingleWords = 3, bands = 4, rowsPerBand = 2)
     val isBatch = col("id") % 7 === 3
-    val t1 = "graft_band_cas_" + graft.Scratch.nameTag()
+    val t1 = BucketedStore.tableName("band_cas")
     writeBandIndex(s, buckets.filter(!isBatch), t1)
     val cat = graft.Scratch.dir("graft_d69_cat") + "/store.catalog"
     graft.ops.Incremental.publishCatalogVersioned(cat, Seq(t1))

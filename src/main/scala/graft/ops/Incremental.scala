@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.{Q, Tables}
+import graft.store.BucketedStore
 
 /** The INCREMENTAL curation pipeline — the third flagship artifact,
   * completing the trio: p01 is the one-shot batch rebuild, s30 is the
@@ -137,8 +138,7 @@ object Incremental {
     * cost): band index, shingle digest, exact-hash store. */
   def initStores(s: SparkSession, corpus: DataFrame,
       prefix: String): (String, String, String) = {
-    val idxTable = s"graft_band_index_${prefix}_" +
-      graft.Scratch.nameTag()
+    val idxTable = BucketedStore.tableName(s"band_index_$prefix")
     val exDir = graft.Scratch.dir(s"graft_${prefix}_exact")
     val shDir = graft.Scratch.dir(s"graft_${prefix}_shingles")
     val (cb, cs) = Dedup.lshBucketsAndShingles(
@@ -571,8 +571,7 @@ object Incremental {
     * owner, the precondition for takedown and compaction. */
   def initOwnedStores(s: SparkSession, corpus: DataFrame,
       tag: String): (String, String, String) = {
-    val idxTable = s"graft_band_index_${tag}_" +
-      graft.Scratch.nameTag()
+    val idxTable = BucketedStore.tableName(s"band_index_$tag")
     val exDir = graft.Scratch.dir(s"graft_${tag}_exact")
     val shDir = graft.Scratch.dir(s"graft_${tag}_shingles")
     val (cb, cs) = Dedup.lshBucketsAndShingles(
@@ -737,13 +736,13 @@ object Incremental {
     * not exist for parquet, and a new generation means a crash mid-
     * compaction leaves the old stores untouched (re-run, don't repair).
     *
-    * Scale shape: the band index rewrite reuses the SAME bucketBy(8, bk)
-    * spec, so the exchange-free probe layout survives the generation
-    * swap (spec re-asserts it on the compacted table). The tombstone set
-    * broadcasts (removals are rare vs the corpus); each store rewrite is
-    * one scan → anti-join → write, embarrassingly parallel — the
-    * cheapest shape a full rewrite can have, and it runs rarely and
-    * offline, never on the ingest path. */
+    * Scale shape: the band index rewrite reuses the SAME bucket spec
+    * (`bk`, the stored count), so the exchange-free probe layout
+    * survives the generation swap (spec re-asserts it on the compacted
+    * table). The tombstone set broadcasts (removals are rare vs the
+    * corpus); each store rewrite is one scan → anti-join → write,
+    * embarrassingly parallel — the cheapest shape a full rewrite can
+    * have, and it runs rarely and offline, never on the ingest path. */
   def compactStores(s: SparkSession, idxTable: String,
       exDir: String, shDir: String, tomb: DataFrame,
       tag: String): (String, String, String) = {
@@ -959,10 +958,7 @@ object Incremental {
     * session's own metastore entry. */
   def exportHandle(s: org.apache.spark.sql.SparkSession,
       table: String): PortableHandle = {
-    val meta = s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"$table is not a bucketed store — nothing to carry portably"))
+    val (meta, spec) = BucketedStore.stored(s, table)
     PortableHandle(table, meta.location.toString, meta.schema.toDDL,
       spec.numBuckets, spec.bucketColumnNames, spec.sortColumnNames)
   }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.store.BucketedStore
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
@@ -786,8 +787,7 @@ object Multimodal {
     // store build: ONE signature pass over corpus payloads feeds BOTH
     // stores; payloads end at this map stage
     val cS = Dedup.reuse(sigs(corpus))
-    val idxTable = "graft_band_index_m11_" +
-      graft.Scratch.nameTag()
+    val idxTable = BucketedStore.tableName("band_index_m11")
     val sigDir = graft.Scratch.dir("graft_m11_sigs")
     // both store writes read the one persisted signature pass — overlap
     // them (guide §2.6)
@@ -937,8 +937,8 @@ object Multimodal {
       shingleWords = 3, bands = 4, rowsPerBand = 2)
     val cS = Dedup.reuse(sigs(docs.select(col("doc_id").as("id"),
       encode(col("text"), "UTF-8").as("payload"))))
-    val tText = "graft_band_xst_" + graft.Scratch.nameTag()
-    val tMedia = "graft_band_xsm_" + graft.Scratch.nameTag()
+    val tText = BucketedStore.tableName("band_xst")
+    val tMedia = BucketedStore.tableName("band_xsm")
     val sigDir = graft.Scratch.dir("graft_xs_sigs")
     val cSigDir = graft.Scratch.dir("graft_xsc_sigs")
     var cText: String = null
@@ -1098,8 +1098,8 @@ object Multimodal {
       shingleWords = 3, bands = 4, rowsPerBand = 2)
     val cS = Dedup.reuse(sigs(docs.select(col("doc_id").as("id"),
       encode(col("text"), "UTF-8").as("payload"))))
-    val tText = "graft_band_xa_" + graft.Scratch.nameTag()
-    val tMedia = "graft_band_xam_" + graft.Scratch.nameTag()
+    val tText = BucketedStore.tableName("band_xa")
+    val tMedia = BucketedStore.tableName("band_xam")
     val sigDir = graft.Scratch.dir("graft_xa_sigs")
     var tPost: String = null
     Dedup.inParallel(

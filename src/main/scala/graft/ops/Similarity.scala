@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.store.BucketedStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1512,34 +1513,26 @@ object Similarity {
 
   // ============== stored IVF index lifecycle (d33/d59/d60/s34) ==============
 
+  /** The IVF index's stored row format: (cell, cid, cv2, cn2), bucketed
+    * on `cell`. */
+  private def ivfRows(assign: DataFrame): DataFrame =
+    assign.select(col("cell"), col("vec_id").as("cid"), col("v").as("cv2"),
+      col("n2").as("cn2"))
+
   /** Write a cell-assigned corpus ([[ivfAssign]] output) as the stored
     * IVF index: a parquet table bucketed on `cell`, so probes join on
     * their assigned cell with NO exchange on the index side (the vector
     * sibling of [[Dedup.writeBandIndex]]). Paid once per corpus;
     * maintained at ingest via [[appendIvfIndex]]. Returns the (per-run
-    * unique) table name — the handle a catalog publishes. */
+    * unique) table name — the handle a catalog publishes. Files land in
+    * scratch, or under `dir`: a cross-JVM maintainer's OWN scratch dies
+    * with its JVM, so a generation meant to outlive it (a handle another
+    * process will resolve) must land at a caller-owned durable path. */
   def writeIvfIndex(s: org.apache.spark.sql.SparkSession,
-      assign: DataFrame, tag: String, nBuckets: Int = 8): String = {
-    val dir = graft.Scratch.dir(s"graft_$tag")
-    val table = s"graft_${tag}_" + dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(24)
-    writeIvfIndexAt(s, assign, s"$dir/ivf_index", table, nBuckets)
-  }
-
-  /** Core of [[writeIvfIndex]] with the physical location and table
-    * name explicit — what a cross-JVM maintainer needs: its OWN
-    * session's Scratch dirs die with its JVM, so a generation meant to
-    * outlive the maintainer (a handle another process will resolve)
-    * must land at a caller-owned durable path. */
-  def writeIvfIndexAt(s: org.apache.spark.sql.SparkSession,
-      assign: DataFrame, path: String, table: String, nBuckets: Int): String = {
-    Dedup.clusterForBuckets(
-        assign.select(col("cell"), col("vec_id").as("cid"), col("v").as("cv2"),
-          col("n2").as("cn2")), nBuckets, "cell")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "cell").sortBy("cell")
-      .option("path", path).saveAsTable(table)
-    table
-  }
+      assign: DataFrame, tag: String, nBuckets: Int = 8,
+      dir: Option[String] = None): String =
+    BucketedStore.write(ivfRows(assign), "cell", nBuckets,
+      BucketedStore.newGeneration(tag, "ivf_index", dir))
 
   /** d73 — re-layout a stored IVF index at a NEW cell count: centroids
     * are the stored generation's vectors with `cid < numCents` (the
@@ -1551,40 +1544,30 @@ object Similarity {
     * THE vector-tier scale lever: per-cell population (and therefore
     * per-probe candidate cost) stays constant only if cells grow with
     * the corpus — ScaleProbePqCells measured the fixed-8-cells probe at
-    * 74.9× under a 100× corpus and the re-laid index back at 2.17×. */
+    * 74.9× under a 100× corpus and the re-laid index back at 2.17×.
+    * `dir` places the new generation as in [[writeIvfIndex]]. */
   def migrateIvfIndexCells(s: org.apache.spark.sql.SparkSession,
-      table: String, numCents: Int, tag: String): String = {
+      table: String, numCents: Int, tag: String,
+      dir: Option[String] = None): String = {
     val stored = s.table(table)
       .select(col("cid").as("vec_id"), col("cv2").as("v"), col("cn2").as("n2"))
     val cents = stored.filter(col("vec_id") < numCents)
       .select(col("vec_id").as("cent_id"), col("v").as("cv"))
     writeIvfIndex(s, ivfAssignAgainst(stored, cents), tag,
-      nBuckets = math.max(numCents, 8))
-  }
-
-  /** [[migrateIvfIndexCells]] at an explicit durable location (the
-    * [[writeIvfIndexAt]] contract, for generations that must outlive
-    * the publishing JVM). */
-  def migrateIvfIndexCellsAt(s: org.apache.spark.sql.SparkSession,
-      table: String, numCents: Int, path: String, newTable: String): String = {
-    val stored = s.table(table)
-      .select(col("cid").as("vec_id"), col("cv2").as("v"), col("cn2").as("n2"))
-    val cents = stored.filter(col("vec_id") < numCents)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    writeIvfIndexAt(s, ivfAssignAgainst(stored, cents), path, newTable,
-      nBuckets = math.max(numCents, 8))
+      nBuckets = math.max(numCents, 8), dir)
   }
 
   /** Append an ingested batch's cell assignments to an EXISTING stored
-    * IVF index — the maintenance write that makes new vectors cost a
-    * batch-sized write instead of a full index rebuild (the
-    * [[Dedup.appendBandIndex]] template on the vector surface). Spark's
-    * bucketed append writes the new rows as additional files of the SAME
-    * bucket spec (hash(cell) % 8), so the exchange-free probe layout
-    * survives the update; RoundElevenSpec proves probe-after-append
-    * byte-identical to probe-after-rebuild. Cell assignment of the batch
-    * uses the SAME centroid anchors as the base build (index structure —
-    * re-training centroids is model maintenance, a rebuild).
+    * IVF index at its stored bucket spec — the maintenance write that
+    * makes new vectors cost a batch-sized write instead of a full index
+    * rebuild (the [[Dedup.appendBandIndex]] template on the vector
+    * surface). The new rows land as additional files of the SAME
+    * layout, also after a [[migrateIvfIndexCells]] grew it, so the
+    * exchange-free probe layout survives the update; RoundElevenSpec
+    * proves probe-after-append byte-identical to probe-after-rebuild.
+    * Cell assignment of the batch uses the SAME centroid anchors as the
+    * base build (index structure — re-training centroids is model
+    * maintenance, a rebuild).
     *
     * Crash-retry contract (the admitBatch append-order discipline on the
     * vector surface): this append and its caller's batch commit are not
@@ -1593,57 +1576,32 @@ object Similarity {
     * (rankings unchanged, spec-drilled with a double append) and
     * physically collapsed by [[compactIvfIndex]]'s distinct. */
   def appendIvfIndex(s: org.apache.spark.sql.SparkSession,
-      assignBatch: DataFrame, table: String, nBuckets: Int = 8): Unit = {
-    Dedup.clusterForBuckets(
-        assignBatch.select(col("cell"), col("vec_id").as("cid"), col("v").as("cv2"),
-          col("n2").as("cn2")), nBuckets, "cell")
-      .write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "cell").sortBy("cell")
-      .saveAsTable(table)
-    // The write commits through the FRAME's session — inside foreachBatch
-    // that is the cloned micro-batch session, whose insert refreshes its
-    // OWN relation cache only. Refresh through the caller's session too,
-    // so batch-side readers (the next probe, compaction) list the new
-    // files instead of a stale snapshot (measured: without this, an
-    // in-stream append was silently invisible to the outer session).
-    s.catalog.refreshTable(table)
-  }
+      assignBatch: DataFrame, table: String): Unit =
+    BucketedStore.append(s, ivfRows(assignBatch), table)
 
   /** Rewrite the stored IVF index minus the tombstoned vector ids into a
-    * NEW generation (same bucketBy(cell) spec — the probe layout
-    * survives; new-table discipline — a crash mid-compaction leaves the
-    * old index untouched). The d57 reclamation pass on vectors; the
-    * tombstone set is frontier-tiny and broadcasts. Returns the new
-    * table name for a catalog publish. */
+    * NEW generation at the CURRENT generation's bucket spec (the probe
+    * layout survives, and a compaction that re-applies after losing a
+    * CAS race against a re-layout honours the winner's count — the s42
+    * lesson on the vector surface); new-table discipline — a crash
+    * mid-compaction leaves the old index untouched. The d57 reclamation
+    * pass on vectors; the tombstone set is frontier-tiny and broadcasts,
+    * and the distinct collapses crash-retry residue (re-appended batch
+    * rows) like compactStores does for the band/shingle stores —
+    * reclaiming residue is half of what compaction is FOR. `dir` places
+    * the new generation as in [[writeIvfIndex]]. Returns the new table
+    * name for a catalog publish. */
   def compactIvfIndex(s: org.apache.spark.sql.SparkSession,
-      table: String, tomb: DataFrame, tag: String): String = {
-    val dir = graft.Scratch.dir(s"graft_$tag")
-    val newTable = s"graft_${tag}_" + dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(24)
-    compactIvfIndexAt(s, table, tomb, s"$dir/ivf_index", newTable,
-      nBuckets = Dedup.bucketCountOf(s, table))
-  }
+      table: String, tomb: DataFrame, tag: String,
+      dir: Option[String] = None): String =
+    BucketedStore.rewrite(s, table, BucketedStore.newGeneration(tag, "ivf_index", dir))(
+      _.join(broadcast(tomb.select(col("vec_id").as("cid"))), Seq("cid"), "left_anti")
+        .select(col("cell"), col("cid"), col("cv2"), col("cn2")))
 
-  /** [[compactIvfIndex]] at the RESOLVED bucket spec and an explicit
-    * durable location — the s42 lesson (`compactBandIndexN`) on the
-    * vector surface: a compaction that re-applies after losing a CAS
-    * race against a re-layout must rewrite at the WINNER's bucket
-    * count, not assume 8; and a generation published for other
-    * processes must not live in the maintainer's self-deleting temp. */
-  def compactIvfIndexAt(s: org.apache.spark.sql.SparkSession,
-      table: String, tomb: DataFrame, path: String, newTable: String,
-      nBuckets: Int): String = {
-    Dedup.clusterForBuckets(s.table(table)
-        .join(broadcast(tomb.select(col("vec_id").as("cid"))), Seq("cid"), "left_anti")
-        .select(col("cell"), col("cid"), col("cv2"), col("cn2"))
-        // collapse crash-retry residue (re-appended batch rows) like
-        // compactStores does for the band/shingle stores — reclaiming
-        // residue is half of what compaction is FOR
-        .distinct(), nBuckets, "cell")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "cell").sortBy("cell")
-      .option("path", path).saveAsTable(newTable)
-    newTable
-  }
+  /** The IVF-PQ index's stored row format: (cell, cid, codes), bucketed
+    * on `cell`. */
+  private def pqRows(enc: DataFrame): DataFrame =
+    enc.select(col("cell"), col("vec_id").as("cid"), col("codes"))
 
   /** Write a PQ-encoded, cell-assigned corpus as the stored IVF-PQ
     * index: (cell, cid, codes) bucketed on `cell` — the COMPRESSED form
@@ -1663,54 +1621,29 @@ object Similarity {
     * parallelism rides the same ladder (the r14 verdict's fixed-8
     * IVF-PQ cap). */
   def writeIvfPqIndex(s: org.apache.spark.sql.SparkSession,
-      enc: DataFrame, tag: String, nBuckets: Int = 8): String = {
-    val dir = graft.Scratch.dir(s"graft_$tag")
-    val table = s"graft_${tag}_" + dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(24)
-    Dedup.clusterForBuckets(
-        enc.select(col("cell"), col("vec_id").as("cid"), col("codes")), nBuckets, "cell")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "cell").sortBy("cell")
-      .option("path", s"$dir/ivfpq_index").saveAsTable(table)
-    table
-  }
+      enc: DataFrame, tag: String, nBuckets: Int = 8): String =
+    BucketedStore.write(pqRows(enc), "cell", nBuckets,
+      BucketedStore.newGeneration(tag, "ivfpq_index"))
 
   /** Append a PQ-encoded ingested batch to an EXISTING stored IVF-PQ
     * index — [[appendIvfIndex]]'s batch-sized-write contract on the
-    * compressed layout (same bucket spec, probe layout survives). The
+    * compressed layout (stored bucket spec, probe layout survives). The
     * batch is encoded against the FROZEN codebook and anchors: both are
     * index structure; re-training either is a rebuild (d62's gate decides
     * when). Crash-retry residue is absorbed by [[probeIvfPqTopK]]'s
     * candidate distinct and collapsed by [[compactIvfPqIndex]]. */
   def appendIvfPqIndex(s: org.apache.spark.sql.SparkSession,
-      enc: DataFrame, table: String): Unit = {
-    val nBuckets = Dedup.bucketCountOf(s, table)
-    Dedup.clusterForBuckets(
-        enc.select(col("cell"), col("vec_id").as("cid"), col("codes")), nBuckets, "cell")
-      .write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "cell").sortBy("cell")
-      .saveAsTable(table)
-    // the s34 staleness fix: commit through the frame's session, refresh
-    // through the caller's too
-    s.catalog.refreshTable(table)
-  }
+      enc: DataFrame, table: String): Unit =
+    BucketedStore.append(s, pqRows(enc), table)
 
   /** Rewrite the stored IVF-PQ index minus tombstoned ids into a NEW
-    * generation (same bucket spec; crash-retry residue collapsed by the
-    * distinct — the [[compactIvfIndex]] contract on codes). */
+    * generation (stored bucket spec; crash-retry residue collapsed by
+    * the distinct — the [[compactIvfIndex]] contract on codes). */
   def compactIvfPqIndex(s: org.apache.spark.sql.SparkSession,
-      table: String, tomb: DataFrame, tag: String): String = {
-    val dir = graft.Scratch.dir(s"graft_$tag")
-    val newTable = s"graft_${tag}_" + dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(24)
-    val nBuckets = Dedup.bucketCountOf(s, table)
-    Dedup.clusterForBuckets(s.table(table)
-        .join(broadcast(tomb.select(col("vec_id").as("cid"))), Seq("cid"), "left_anti")
-        .select(col("cell"), col("cid"), col("codes"))
-        .distinct(), nBuckets, "cell")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "cell").sortBy("cell")
-      .option("path", s"$dir/ivfpq_index").saveAsTable(newTable)
-    newTable
-  }
+      table: String, tomb: DataFrame, tag: String): String =
+    BucketedStore.rewrite(s, table, BucketedStore.newGeneration(tag, "ivfpq_index"))(
+      _.join(broadcast(tomb.select(col("vec_id").as("cid"))), Seq("cid"), "left_anti")
+        .select(col("cell"), col("cid"), col("codes")))
 
   /** Probe a stored IVF-PQ index — the full production funnel against
     * the compressed layout: ADC-rank the query's cell from codes alone
@@ -2191,7 +2124,7 @@ object Similarity {
     *    ranking (rankings re-close over the survivors) and drops
     *    removed QUERY vectors entirely;
     *  - `post_compact`: the index is rewritten minus the tombstoned
-    *    entries (same bucketBy(cell) spec — the exchange-free probe
+    *    entries (same bucket spec on `cell` — the exchange-free probe
     *    layout survives, spec-asserted) and probed UNFILTERED.
     *
     * The oracle computes the post-takedown ranking ONCE and demands it
@@ -2441,7 +2374,7 @@ object Similarity {
       .map(_.zipWithIndex.map { case ((_, v), i) => (i.toLong, v) })
     val pqTable = writeIvfPqIndex(s,
       stored.withColumn("codes", pqCodesCol(cb)), "ivfpq_d72",
-      nBuckets = Dedup.bucketCountOf(s, g1.head))
+      nBuckets = BucketedStore.bucketCountOf(s, g1.head))
     Incremental.commitCatalogCas(cat) { (_, _) => Seq(pqTable, "pq") }
     // the compression really happened: the migrated tier is codes-only
     require(s.table(pqTable).columns.toSeq == Seq("cell", "cid", "codes"),
@@ -2777,7 +2710,7 @@ object Similarity {
       // resolved bucket count, so a cell migration grows both tiers
       writeIvfPqIndex(s,
         stored.withColumn("codes", pqCodesCol(codebookOf(rawTable))), tag,
-        nBuckets = Dedup.bucketCountOf(s, rawTable))
+        nBuckets = BucketedStore.bucketCountOf(s, rawTable))
     }
     val pq1 = encodePq(raw1, "ivfpq_d74")
     val cat = graft.Scratch.dir("graft_d74_cat") + "/tiers.catalog"
@@ -2967,7 +2900,7 @@ object Similarity {
     val pq = writeIvfPqIndex(s, s.table(raw)
       .select(col("cell"), col("cid").as("vec_id"), col("cv2").as("v"))
       .withColumn("codes", pqCodesCol(cb)), "ivfpq_d75",
-      nBuckets = Dedup.bucketCountOf(s, raw))
+      nBuckets = BucketedStore.bucketCountOf(s, raw))
     val cents = s.table(raw).filter(col("cid") < 8)
       .select(col("cid").as("cent_id"), col("cv2").as("cv"))
     val assignQ = ivfAssignAgainst(
@@ -3124,7 +3057,7 @@ object Similarity {
     val pq = writeIvfPqIndex(s, s.table(raw)
       .select(col("cell"), col("cid").as("vec_id"), col("cv2").as("v"))
       .withColumn("codes", pqCodesCol(cb)), "ivfpq_d76",
-      nBuckets = Dedup.bucketCountOf(s, raw))
+      nBuckets = BucketedStore.bucketCountOf(s, raw))
     val cat = graft.Scratch.dir("graft_d76_cat") + "/tiers.catalog"
     Incremental.publishCatalogVersioned(cat, Seq(raw, pq, "8"))
     val cur = Incremental.resolveCatalog(cat, expect = 3)
@@ -3350,7 +3283,7 @@ object Similarity {
     val pq = writeIvfPqIndex(s, s.table(raw)
       .select(col("cell"), col("cid").as("vec_id"), col("cv2").as("v"))
       .withColumn("codes", pqCodesCol(cb)), "ivfpq_d77",
-      nBuckets = Dedup.bucketCountOf(s, raw))
+      nBuckets = BucketedStore.bucketCountOf(s, raw))
     val cat = graft.Scratch.dir("graft_d77_cat") + "/tiers.catalog"
     Incremental.publishCatalogVersioned(cat, Seq(raw, pq, "8"))
     val cur = Incremental.resolveCatalog(cat, expect = 3)

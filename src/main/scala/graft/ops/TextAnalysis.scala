@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.store.BucketedStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2411,35 +2412,24 @@ object TextAnalysis {
       .select("term", "doc_id", "tf", "dl")
 
   /** First write of a posting-store generation. Bucket count is scale-
-    * derived from the SOURCE corpus ([[Dedup.scaleBuckets]] — the r14
-    * verdict's fix for the fixed-8 cap: under clusterForBuckets a write
-    * is nBuckets sort tasks each holding a whole bucket, so the count
-    * must ride the corpus); every fixture SF keeps the seed-8 layout,
-    * the 100× probes derive a grown count. */
+    * derived from the SOURCE corpus ([[BucketedStore.scaleBuckets]]:
+    * `graft.store.rowsPerBucket` budgets source DOCUMENTS per bucket,
+    * not posting rows) — the r14 verdict's fix for the fixed-8 cap:
+    * under clusterForBuckets a write is nBuckets sort tasks each
+    * holding a whole bucket, so the count must ride the corpus; every
+    * fixture SF keeps the seed-8 layout, the 100× probes derive a grown
+    * count. */
   private[graft] def writePostingStore(s: org.apache.spark.sql.SparkSession,
-      postings: DataFrame, tag: String): String = {
-    val dir = graft.Scratch.dir(s"graft_$tag")
-    val table = s"graft_${tag}_" + dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(24)
-    val nBuckets = Dedup.scaleBuckets(postings)
-    Dedup.clusterForBuckets(postings, nBuckets, "term")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "term").sortBy("term")
-      .option("path", s"$dir/postings").saveAsTable(table)
-    table
-  }
+      postings: DataFrame, tag: String): String =
+    BucketedStore.write(postings, "term", BucketedStore.scaleBuckets(postings),
+      BucketedStore.newGeneration(tag, "postings"))
 
-  /** Maintenance append at the STORED generation's bucket spec
-    * (catalog-resolved — a mismatched bucketBy fails loudly in Spark's
-    * validation, and assuming 8 would wedge appends after any bucket-
-    * count migration). */
+  /** Maintenance append at the STORED generation's bucket spec (a
+    * mismatched bucketBy fails loudly in Spark's validation, and
+    * assuming 8 would wedge appends after any bucket-count migration). */
   private[graft] def appendPostingStore(s: org.apache.spark.sql.SparkSession,
-      postings: DataFrame, table: String): Unit = {
-    val nBuckets = Dedup.bucketCountOf(s, table)
-    Dedup.clusterForBuckets(postings, nBuckets, "term")
-      .write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "term").sortBy("term").saveAsTable(table)
-    s.catalog.refreshTable(table) // the s34 staleness fix
-  }
+      postings: DataFrame, table: String): Unit =
+    BucketedStore.append(s, postings, table)
 
   /** New-generation rewrite minus tombstoned docs, retry residue
     * collapsed (the d57 contract on postings). Rewrites at the CURRENT
@@ -2447,19 +2437,10 @@ object TextAnalysis {
     * discipline: a compaction racing a migration must honor the
     * winner's layout). */
   private[graft] def compactPostingStore(s: org.apache.spark.sql.SparkSession,
-      table: String, tomb: DataFrame, tag: String): String = {
-    val dir = graft.Scratch.dir(s"graft_$tag")
-    val newTable = s"graft_${tag}_" + dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(24)
-    val nBuckets = Dedup.bucketCountOf(s, table)
-    Dedup.clusterForBuckets(s.table(table)
-        .join(broadcast(tomb.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-        .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-        .distinct(), nBuckets, "term")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "term").sortBy("term")
-      .option("path", s"$dir/postings").saveAsTable(newTable)
-    newTable
-  }
+      table: String, tomb: DataFrame, tag: String): String =
+    BucketedStore.rewrite(s, table, BucketedStore.newGeneration(tag, "postings"))(
+      _.join(broadcast(tomb.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+        .select(col("term"), col("doc_id"), col("tf"), col("dl")))
 
   /** Append one batch's df/stats deltas under a batch-keyed path
     * (overwrite → a retried batch replaces its own deltas, never

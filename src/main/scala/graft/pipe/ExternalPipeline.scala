@@ -93,7 +93,12 @@ object ExternalPipeline {
       // whole attempt dir goes; on failure the logs stay behind for
       // post-mortem while the bulky in/out staging is still reclaimed.
       var pipelineFailed = false
+      // the one open `*.txt` output reader (step 3): closed as soon as
+      // its file is drained, and here if the task ends before that
+      var reader: scala.io.Source = null
+      def closeReader(): Unit = if (reader != null) { reader.close(); reader = null }
       if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
+        closeReader()
         if (pipelineFailed) {
           deleteRecursively(inDir.toFile)
           deleteRecursively(outDir.toFile)
@@ -139,7 +144,9 @@ object ExternalPipeline {
         .sortBy(_.getName)
       txt.iterator.flatMap { f =>
         val name = f.getName
-        scala.io.Source.fromFile(f, "UTF-8").getLines().map(l => (name, l))
+        reader = scala.io.Source.fromFile(f, "UTF-8")
+        // `++` evaluates its operand only once the lines run out
+        reader.getLines().map(l => (name, l)) ++ { closeReader(); Iterator.empty }
       }
     }.toDF("file", "line")
   }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{Q, Tables}
+import graft.store.BucketedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -677,8 +678,7 @@ object StreamingQueries {
       corpus, "doc_id", "text", shingleWords = 3, bands = 4, rowsPerBand = 2)
     // per-run table name (the d33 rule): fixed names collide across
     // concurrent sessions sharing a metastore
-    val idxTable = "graft_band_index_s16_" +
-      graft.Scratch.nameTag()
+    val idxTable = BucketedStore.tableName("band_index_s16")
     Dedup.writeBandIndex(s, corpusBuckets, idxTable)
     val outDir = graft.Scratch.dir("graft_s16_sink")
     val schema = StructType(Seq(
@@ -1604,8 +1604,7 @@ object StreamingQueries {
     val corpus = docsStatic.filter(col("doc_id") % 11 =!= 5)
     val (corpusBuckets, corpusShingles) = Dedup.lshBucketsAndShingles(
       corpus, "doc_id", "text", shingleWords = 3, bands = 4, rowsPerBand = 2)
-    val idxTable = "graft_band_index_s30_" +
-      graft.Scratch.nameTag()
+    val idxTable = BucketedStore.tableName("band_index_s30")
     Dedup.writeBandIndex(s, corpusBuckets, idxTable)
     val benchSet = chunkHashes(docsStatic.filter(col("doc_id") % 13 === 7))
       .select(col("chunk_hash").as("bh")).distinct()
@@ -2199,8 +2198,7 @@ object StreamingQueries {
 
     // store build: ONE signature pass feeds both stores (the m11 build)
     val cS = Dedup.reuse(Multimodal.sigs(corpus))
-    val idxTable = "graft_band_index_s35_" +
-      graft.Scratch.nameTag()
+    val idxTable = BucketedStore.tableName("band_index_s35")
     val sigDir = graft.Scratch.dir("graft_s35_sigs")
     // both store writes read the one persisted signature pass — overlap
     Dedup.inParallel(
@@ -2324,8 +2322,7 @@ object StreamingQueries {
       encode(col("text"), "UTF-8").as("payload"))
 
     val cS = Dedup.reuse(Multimodal.sigs(corpus))
-    val idx1 = "graft_band_index_s36_" +
-      graft.Scratch.nameTag()
+    val idx1 = BucketedStore.tableName("band_index_s36")
     val sig1 = graft.Scratch.dir("graft_s36_sigs")
     // both store writes read the one persisted signature pass — overlap
     Dedup.inParallel(
@@ -3210,7 +3207,7 @@ object StreamingQueries {
     val (buckets, shingles) = Dedup.lshBucketsAndShingles(docs, "doc_id", "text",
       shingleWords = 3, bands = 4, rowsPerBand = 2)
     val isProbe = col("id") % 7 === 5
-    val t1 = "graft_band_s40_" + graft.Scratch.nameTag()
+    val t1 = BucketedStore.tableName("band_s40")
     Dedup.writeBandIndex(s, buckets.filter(!isProbe), t1)
     val cat = graft.Scratch.dir("graft_s40_cat") + "/index.catalog"
     Incremental.publishCatalogVersioned(cat, Seq(t1))
@@ -3493,7 +3490,7 @@ object StreamingQueries {
     * commits v3. The operations commute on content (compact∘migrate ≡
     * migrate∘compact), and the compaction publisher rewrites at the
     * RESOLVED bucket spec rather than assuming 8
-    * ([[graft.ops.Dedup.compactBandIndexN]]), so the final state —
+    * ([[graft.ops.Dedup.compactBandIndex]]), so the final state —
     * (base ∪ wave-0 appends) − tombstones at 32 buckets, version 3 —
     * is deterministic REGARDLESS of race order, which is what makes a
     * genuinely nondeterministic thread race oracle-checkable: wave 1
@@ -3598,10 +3595,11 @@ object StreamingQueries {
     val docs = Tables.documents(s, d)
     val (buckets, shingles) = Dedup.lshBucketsAndShingles(docs, "doc_id", "text",
       shingleWords = 3, bands = 4, rowsPerBand = 2)
-    val t1 = "graft_band_s42_" + graft.Scratch.nameTag()
-    Dedup.writeBandIndexN(s, buckets.filter(col("id") % 7 =!= 5), t1, 8)
+    val t1 = BucketedStore.tableName("band_s42")
+    Dedup.writeBandIndex(s, buckets.filter(col("id") % 7 =!= 5), t1)
     val cat = graft.Scratch.dir("graft_s42_cat") + "/index.catalog"
-    Incremental.publishCatalogVersioned(cat, Seq(t1, "8"))
+    Incremental.publishCatalogVersioned(cat,
+      Seq(t1, BucketedStore.bucketCountOf(s, t1).toString))
     s42Catalog = cat
     val allShingles = shingles
     val watched = graft.Scratch.dir("graft_s42_watched")
@@ -3654,7 +3652,7 @@ object StreamingQueries {
                   .otherwise("unique").as("verdict"),
                 col("best_match"))
               .write.mode("append").parquet(outDir)
-            Dedup.appendBandIndexN(s, bB, lines.head, lines(1).toInt)
+            Dedup.appendBandIndex(s, bB, lines.head)
           }
         }
         .trigger(Trigger.AvailableNow())
@@ -3677,8 +3675,7 @@ object StreamingQueries {
           Seq(Dedup.migrateBandIndex(s, cur.head, 32, "s42m"), "32")
         }
         val compact = publisher { (_, cur) =>
-          Seq(Dedup.compactBandIndexN(s, cur.head, tomb, "s42c", cur(1).toInt),
-            cur(1))
+          Seq(Dedup.compactBandIndex(s, cur.head, tomb, "s42c"), cur(1))
         }
         migrate.start(); compact.start(); start.countDown()
         migrate.join(); compact.join()
@@ -3885,10 +3882,9 @@ object StreamingQueries {
               .select(lit(b.toLong).as("wave"), col("qid"), col("cell"),
                 col("cid"), col("rank"), col("cosine"))
               .write.mode("append").parquet(outDir)
-            // append at the RESOLVED bucket count: a post-migration
-            // append follows the migrated physical layout
-            Similarity.appendIvfIndex(s, bAssign, h.head,
-              nBuckets = math.max(cells, 8))
+            // append to the RESOLVED generation at its stored spec: a
+            // post-migration append follows the migrated physical layout
+            Similarity.appendIvfIndex(s, bAssign, h.head)
           }
         }
         .trigger(Trigger.AvailableNow())

@@ -239,6 +239,41 @@ class PipeSpec extends SparkTestBase {
     assert(!Files.exists(attempt.resolve("in")) && !Files.exists(attempt.resolve("out")))
   }
 
+  test("every *.txt output reader is closed: after jobs whose pipeline " +
+    "writes many .txt files, /proc/self/fd is back to its baseline") {
+    val fdDir = Paths.get("/proc/self/fd")
+    assume(Files.isDirectory(fdDir), "needs /proc/self/fd")
+    writeScript(binDir, "run_many.sh",
+      """i=0; while [ $i -lt 150 ]; do echo "line$i" > "out_$i.txt"; i=$((i+1)); done""")
+    val cfg = PipeConfig.parse(configJson(
+      """{"command" : "run_many.sh %MCR_ROOT% %INPUT_FILE%"}"""))
+    // 8 tasks, each reading 150 one-line outputs
+    def pipeDf = ExternalPipeline.run(
+      spark.createDataset((1 to 8).map(i => s"r$i")).repartition(8),
+      None, cfg.algorithm("CRANKER"), cfg.globals).as[(String, String)]
+    def fds: Seq[String] = Files.list(fdDir).iterator().asScala.toSeq
+      .flatMap(l => scala.util.Try(Files.readSymbolicLink(l).toString).toOption)
+    assert(pipeDf.collect().length == 1200) // warm: classes, jars, pools
+    val baseline = fds.size
+    // a leaked reader is an fd on a (deleted) staging output; GC may
+    // close some leaks first, so every surviving one counts. The count
+    // allowance absorbs fds the idle session's own threads open or close.
+    def assertNoLeak(job: String): Unit = {
+      val now = fds
+      val staged = now.filter(_.startsWith(cfg.globals.stageDir))
+      assert(staged.isEmpty, s"$job: ${staged.size} fds still open on pipe outputs")
+      assert(now.size - baseline <= 20,
+        s"$job: fd count grew from $baseline to ${now.size}")
+    }
+    // drained outputs: each reader closes at its file's end (1200 readers)
+    assert(pipeDf.collect().length == 1200)
+    assertNoLeak("drained job")
+    // abandoned outputs: every task stops inside its output files, and
+    // the task-completion listener closes the open reader
+    (1 to 5).foreach(_ => assert(pipeDf.mapPartitions(_.take(1)).collect().length == 8))
+    assertNoLeak("abandoned jobs")
+  }
+
   test("repartitionTo controls pipeline invocation count (split-size knob)") {
     val cfg = PipeConfig.parse(configJson(
       """{"command" : "run_read.sh %MCR_ROOT% %INPUT_FILE% part.txt"}"""))

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** 100×-decade datapoint for the POSTING-STORE lifecycle (r14 verdict
   * tasks 1/8): with bucket counts scale-derived at first write
-  * (`Dedup.scaleBuckets`) instead of fixed 8, the store write must no
-  * longer be 8-task-bound at the 100× decade. Prices:
+  * (`BucketedStore.scaleBuckets`) instead of fixed 8, the store write
+  * must no longer be 8-task-bound at the 100× decade. Prices:
   *
   *   - the writePostingStore leg alone (derived bucket count, wall,
   *     data-file census) at sf0.1 (5k docs → seed 8) and at 100×
@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * sbt 'Test/runMain graft.PostingScaleProbe' → BENCH_SCALE_r15. */
 object PostingScaleProbe {
   def main(args: Array[String]): Unit = {
-    import ops.{Dedup, TextAnalysis}
+    import ops.TextAnalysis
+    import store.BucketedStore
     val spark = Engine.session(appName = "graft-posting-scale-probe")
 
     def time(body: => Unit): Double = {
@@ -52,7 +53,7 @@ object PostingScaleProbe {
         Tables.documents(spark, sf).select("doc_id", "text"))
       var table: String = null
       val w = time { table = TextAnalysis.writePostingStore(spark, postings, tag) }
-      val n = Dedup.bucketCountOf(spark, table)
+      val n = BucketedStore.bucketCountOf(spark, table)
       val files = dataFiles(tableDir(table))
       f""""write_sec":$w%.2f,"buckets":$n,"data_files":$files"""
     }

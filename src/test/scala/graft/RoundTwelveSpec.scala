@@ -279,16 +279,18 @@ class RoundTwelveSpec extends SparkTestBase {
 
   test("d64 re-bucket migration: content survives the 8→32 rewrite, the " +
     "32-bucket generation answers a shuffled probe bucket-aware with no " +
-    "index-side exchange, and an append at the STALE spec is rejected " +
-    "loudly") {
+    "index-side exchange, and a post-migration append lands at the " +
+    "migrated 32-bucket spec") {
     import ops.Dedup
+    import graft.store.BucketedStore
     val docs = Tables.documents(spark, sf0001)
     val (buckets, _) = Dedup.lshBucketsAndShingles(docs, "doc_id", "text",
       shingleWords = 3, bands = 4, rowsPerBand = 2)
     val base = buckets.filter(col("id") % 7 =!= 3 && col("id") % 7 =!= 5)
     val t1 = "graft_band_r12m_" +
       graft.Scratch.dir("graft_band_r12m").replaceAll("[^A-Za-z0-9]", "_").takeRight(24)
-    Dedup.writeBandIndexN(spark, base, t1, 8)
+    Dedup.writeBandIndex(spark, base, t1)
+    assert(BucketedStore.bucketCountOf(spark, t1) == 8)
     val t2 = Dedup.migrateBandIndex(spark, t1, nBuckets = 32, "r12m")
 
     // content-preserving: the migrated generation holds exactly the
@@ -296,14 +298,22 @@ class RoundTwelveSpec extends SparkTestBase {
     assert(rows(spark.table(t2)) == rows(spark.table(t1).distinct()),
       "migration changed the index content")
 
-    // the maintenance path works at the NEW spec and fails LOUDLY at
-    // the stale one — the reason d64 publishes the spec in the catalog
-    Dedup.appendBandIndexN(spark, buckets.filter(col("id") % 7 === 3), t2, 32)
-    val ex = intercept[Exception] {
-      Dedup.appendBandIndexN(spark, buckets.filter(col("id") % 7 === 5), t2, 8)
-    }
-    assert(ex.getMessage.toLowerCase.contains("bucket"),
-      s"stale-spec append failed for the wrong reason: ${ex.getMessage}")
+    // the maintenance path follows the NEW spec on its own: the batch
+    // lands as files of buckets 0..31, past the old 8, and is visible
+    def bucketIds(t: String): Seq[Int] =
+      Option(new java.io.File(BucketedStore.stored(spark, t)._1.location).listFiles())
+        .toSeq.flatten.map(_.getName).filter(_.endsWith(".parquet"))
+        .flatMap(org.apache.spark.sql.execution.datasources.BucketingUtils.getBucketId)
+    val before = bucketIds(t2)
+    val wave = buckets.filter(col("id") % 7 === 3)
+    Dedup.appendBandIndex(spark, wave, t2)
+    val added = bucketIds(t2).diff(before)
+    assert(BucketedStore.bucketCountOf(spark, t2) == 32)
+    assert(added.nonEmpty && added.forall(b => b >= 0 && b < 32) && added.exists(_ >= 8),
+      s"post-migration append did not land at the 32-bucket spec: $added")
+    assert(rows(spark.table(t2).filter(col("id") % 7 === 3)) ==
+      rows(wave.select(concat_ws(":", col("band"), col("band_key")).as("bk"), col("id"))),
+      "the post-migration append is not visible in the migrated generation")
 
     // layout: a shuffled probe join reads the 32-bucket side straight
     // from its files — no exchange, bucket-aware scan

@@ -186,7 +186,7 @@ object ScaleProbeLifecycle {
       val (buckets, _) = Dedup.lshBucketsAndShingles(docs, "doc_id", "text", 3, 4, 2)
       val t1 = s"graft_band_${tag}_" +
         graft.Scratch.dir(s"graft_band_$tag").replaceAll("[^A-Za-z0-9]", "_").takeRight(24)
-      Dedup.writeBandIndexN(spark, buckets, t1, 8)
+      Dedup.writeBandIndex(spark, buckets, t1)
       val tMigrate = time {
         Dedup.migrateBandIndex(spark, t1, 32, tag): Unit
       }

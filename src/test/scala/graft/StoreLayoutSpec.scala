@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** Round-14 optimization guard: bucketed store writes must not fan out
   * nTasks × nBuckets files. Before the writer-side bucket-key
-  * repartition (`Dedup.clusterForBuckets`), a 16-partition input wrote
-  * up to 128 data files per 8-bucket store (measured 1026 files on
+  * repartition (`BucketedStore.clusterForBuckets`), a 16-partition
+  * input wrote up to 128 data files per 8-bucket store (measured 1026 files on
   * t53's posting store at sf0.1); after it, each write lands exactly
   * one file per non-empty bucket. Layout is invisible to SQL results
   * (the full Verify run covers those), so the file-count contract is
@@ -71,7 +71,7 @@ class StoreLayoutSpec extends SparkTestBase {
   test("scaleBuckets grows with source rows and falls back to seed") {
     // in-memory frame: no parquet footers -> conservative seed
     val mem = (1L to 1000L).map(i => (i, s"t$i")).toDF("doc_id", "text")
-    assert(ops.Dedup.scaleBuckets(mem) == 8)
+    assert(store.BucketedStore.scaleBuckets(mem) == 8)
     // parquet-backed frame: ladder over the footer row count
     val dir = Scratch.dir("graft_layout_scale_src")
     (1L to 1000L).map(i => (i, s"t$i")).toDF("doc_id", "text")
@@ -80,9 +80,9 @@ class StoreLayoutSpec extends SparkTestBase {
     spark.conf.set("graft.store.rowsPerBucket", "16")
     try {
       // 1000 rows / budget 16 -> first 8*2^k with 16*b >= 1000 is 64
-      assert(ops.Dedup.scaleBuckets(src) == 64)
+      assert(store.BucketedStore.scaleBuckets(src) == 64)
       spark.conf.set("graft.store.rowsPerBucket", "4000")
-      assert(ops.Dedup.scaleBuckets(src) == 8,
+      assert(store.BucketedStore.scaleBuckets(src) == 8,
         "a budget covering the corpus keeps the seed layout")
     } finally spark.conf.unset("graft.store.rowsPerBucket")
   }
@@ -97,7 +97,7 @@ class StoreLayoutSpec extends SparkTestBase {
       // 300 docs / budget 16 -> 32 buckets (8*16=128 < 300 <= 32*16)
       val table = ops.TextAnalysis.writePostingStore(
         spark, ops.TextAnalysis.postingsOf(docs), "layout_grown")
-      assert(ops.Dedup.bucketCountOf(spark, table) == 32,
+      assert(store.BucketedStore.bucketCountOf(spark, table) == 32,
         "first write must scale the bucket count with the source")
       val files = dataFiles(tableDir(table))
       assert(files.nonEmpty && files.size <= 32,
@@ -118,7 +118,7 @@ class StoreLayoutSpec extends SparkTestBase {
     (1L to 10L).toDF("id").write.mode("overwrite")
       .option("path", Scratch.dir("graft_layout_plain")).saveAsTable(t)
     intercept[IllegalArgumentException] {
-      ops.Dedup.bucketCountOf(spark, t)
+      store.BucketedStore.bucketCountOf(spark, t)
     }
   }
 
